@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs the headline queries
   * (Suite entries flagged bench=true) on SPARK_GRAFT_SF_DIR and prints

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan inspection tool: prints the formatted physical plan and timed
   * execution for one or more Suite queries. Usage:

@@ -1429,6 +1429,4 @@ object Suite {
 
   def oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap
-
-  def benchNames: Seq[String] = all.filter(_.bench).map(_.name)
 }

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions.{col, count, lit, max, round, size, sum}
+import org.apache.spark.sql.functions.{col, lit, max, sum}
 
-import graft.operators.{EmbeddingOps, Forget, Multimodal, TextOps}
+import graft.operators.{EmbeddingOps, Forget, TextOps}
 
 import graft.SuiteMLShared._
 

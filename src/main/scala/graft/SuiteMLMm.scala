@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions.{col, count, lit, round, size}
+import org.apache.spark.sql.functions.{col, count, lit, round}
 
-import graft.operators.{EmbeddingOps, Multimodal, TextOps}
+import graft.operators.{EmbeddingOps, Multimodal}
 
 import graft.SuiteMLShared._
 

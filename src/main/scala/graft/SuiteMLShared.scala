@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions.{col, count, lit, round, size}
+import org.apache.spark.sql.functions.{col, lit}
 
-import graft.operators.{EmbeddingOps, Multimodal, TextOps}
+import graft.operators.{EmbeddingOps, TextOps}
 
 /** Shared fixtures, constants, and oracle CTE builders for the
   * per-family SuiteML registry files — one definition per construction

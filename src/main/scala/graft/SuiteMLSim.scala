@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions.{col, count, lit, round, size}
+import org.apache.spark.sql.functions.{col, size}
 
-import graft.operators.{EmbeddingOps, Multimodal, TextOps}
+import graft.operators.{EmbeddingOps, TextOps}
 
 import graft.SuiteMLShared._
 

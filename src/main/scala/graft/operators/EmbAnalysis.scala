@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.operators.Stage.PinOps
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

@@ -53,9 +53,6 @@ private[graft] trait EmbIvfOps { this: EmbeddingOps.type =>
     scoredCents.withColumn("crk", row_number().over(wAssign))
   }
 
-  private def rankedCentroids(e: DataFrame, nCentroids: Int): DataFrame =
-    rankedAgainst(e, seedCentroids(e, nCentroids))
-
   /** Centroid-count bound for the PER-ROW literal routes
     * ([[assignedCells]], [[probedCells]]): each collected centroid
     * becomes a typedlit struct in the expression tree, so the plan
@@ -68,8 +65,6 @@ private[graft] trait EmbIvfOps { this: EmbeddingOps.type =>
     * form (one BroadcastExchange, no literals — value-identical,
     * spec-pinned). */
   private[graft] val MaxLiteralCentroids = 64
-
-  private def centProbeLimit: Int = MaxLiteralCentroids + 1
 
   /** The crk = 1 slice of [[rankedAgainst]] computed PER ROW — argmax
     * cell assignment against the DRIVER-COLLECTED centroid list. The
@@ -95,14 +90,15 @@ private[graft] trait EmbIvfOps { this: EmbeddingOps.type =>
   private[graft] def assignedCells(e: DataFrame,
       cents: DataFrame): DataFrame = {
     val idType = cents.schema("cent_id").dataType
-    val centRows = cents.select(col("cent_id"), col("cq"), col("cn"))
-      .limit(centProbeLimit).collect()
-    if (centRows.isEmpty)
+    val centRows = Route.bounded(
+      cents.select(col("cent_id"), col("cq"), col("cn")),
+      MaxLiteralCentroids)
+    if (centRows.exists(_.isEmpty))
       e.where(lit(false))
         .withColumn("cent_id", lit(null).cast(idType))
         .withColumn("ccos", lit(null).cast("double"))
-    else if (centRows.length <= MaxLiteralCentroids) {
-      val scored = centRows.toSeq.map { r =>
+    else if (centRows.isDefined) {
+      val scored = centRows.get.toSeq.map { r =>
         val id = r.get(0).asInstanceOf[Number].longValue
         val cq = r.getAs[scala.collection.Seq[Long]](1).toSeq
         val cn = r.get(2).asInstanceOf[Number].longValue
@@ -150,13 +146,14 @@ private[graft] trait EmbIvfOps { this: EmbeddingOps.type =>
       nProbe: Int): DataFrame = {
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
     val idType = cents.schema("cent_id").dataType
-    val centRows = cents.select(col("cent_id"), col("cq"), col("cn"))
-      .limit(centProbeLimit).collect()
-    if (centRows.isEmpty)
+    val centRows = Route.bounded(
+      cents.select(col("cent_id"), col("cq"), col("cn")),
+      MaxLiteralCentroids)
+    if (centRows.exists(_.isEmpty))
       e.where(lit(false)).select(col("vec_id"), col("q"), col("nn"))
         .withColumn("cent_id", lit(null).cast(idType))
-    else if (centRows.length <= MaxLiteralCentroids) {
-      val scored = centRows.toSeq.map { r =>
+    else if (centRows.isDefined) {
+      val scored = centRows.get.toSeq.map { r =>
         val id = r.get(0).asInstanceOf[Number].longValue
         val cq = r.getAs[scala.collection.Seq[Long]](1).toSeq
         val cn = r.get(2).asInstanceOf[Number].longValue

@@ -1,9 +1,6 @@
 package graft.operators
 
-import graft.operators.Stage.PinOps
-
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** A pinned read token of a persisted index (see

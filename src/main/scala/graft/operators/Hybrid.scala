@@ -73,6 +73,8 @@ object Hybrid {
       rrfK: Int = 60, nProbe: Int = 2,
       lexAsOf: Option[IndexSnapshot] = None,
       denseAsOf: Option[IndexSnapshot] = None): DataFrame = {
+    // resolved up front: a malformed conf refuses before any arm runs
+    val timeout = Overlap.timeoutOf(s)
     // The two arms are INDEPENDENT (separate indexes, separate query
     // frames) but each serve interleaves driver-side metadata work
     // (bounded collects, the pin jobs) with cluster stages, which
@@ -122,7 +124,7 @@ object Hybrid {
       denseF.onComplete { case Failure(e) => both.tryFailure(e); case _ => }
       lexF.zip(denseF).onComplete(both.tryComplete)
       val (lex, dense) =
-        try Await.result(both.future, Overlap.timeoutOf(s))
+        try Await.result(both.future, timeout)
         catch {
           case e: Throwable =>
             // first failure (or the backstop timeout) wins: cancel

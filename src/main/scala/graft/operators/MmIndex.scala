@@ -189,8 +189,7 @@ private[graft] trait MmIndexOps { this: Multimodal.type =>
     bandedIndexAppend(audioHashBands(media), path, failpoint, stamp)
 
   private def bandedIndexAppend(hashed: DataFrame, path: String,
-      failpoint: String => Unit,
-      stamp: String => Unit = _ => ()): Unit = {
+      failpoint: String => Unit, stamp: String => Unit): Unit = {
     val s = hashed.sparkSession
     val nBuckets = phashParams(s, path)
     EmbeddingOps.appendSegment(s, path, "bands",
@@ -248,38 +247,6 @@ private[graft] trait MmIndexOps { this: Multimodal.type =>
         .write.mode("overwrite").parquet(s"$segDir/_pstats"),
       readSchema = Some(bandedStoredSchema))
 
-  // ---- family-neutral maintenance names --------------------------------
-  // The maintenance doors operate on ANY banded media root (the image
-  // aHash index and the audio fingerprint index share the layout), but
-  // their original names say "phash" — call sites servicing an audio
-  // root through phashIndexDelete read as lies. These delegates are
-  // the honest spellings; the phash names remain as the image-familiar
-  // aliases. No behavior difference whatsoever.
-
-  /** [[phashIndexDelete]] under its family-neutral name — the banded
-    * media index protocol is hash-family-agnostic, so audio roots
-    * service through the same door. */
-  def bandedIndexDelete(s: org.apache.spark.sql.SparkSession,
-      path: String, ids: DataFrame,
-      failpoint: String => Unit = _ => ()): Unit =
-    phashIndexDelete(s, path, ids, failpoint)
-
-  /** [[phashIndexCompact]] under its family-neutral name. */
-  def bandedIndexCompact(s: org.apache.spark.sql.SparkSession,
-      path: String, failpoint: String => Unit = _ => ()): Int =
-    phashIndexCompact(s, path, failpoint)
-
-  /** [[phashIndexStats]] under its family-neutral name. */
-  def bandedIndexStats(s: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    phashIndexStats(s, path)
-
-  /** [[phashIndexCompactTail]] under its family-neutral name. */
-  def bandedIndexCompactTail(s: org.apache.spark.sql.SparkSession,
-      path: String, maxSegments: Int = 4,
-      failpoint: String => Unit = _ => ()): Int =
-    phashIndexCompactTail(s, path, maxSegments, failpoint)
-
   /** The standing maintenance policy for a banded media root
     * ([[graft.operators.EmbeddingOps.maintainIndexWith]]): forget
     * sweep -> full rewrite; over `maxSegments` -> tail merge. */
@@ -308,12 +275,6 @@ private[graft] trait MmIndexOps { this: Multimodal.type =>
       Seq("params"),
       validate = EmbeddingOps.requireSameBucketModuli(s, _),
       failpoint = failpoint)
-
-  /** [[bandedIndexMerge]] under the image-familiar alias. */
-  def phashIndexMerge(s: org.apache.spark.sql.SparkSession,
-      sources: Seq[String], dest: String,
-      failpoint: String => Unit = _ => ()): Unit =
-    bandedIndexMerge(s, sources, dest, failpoint)
 
   /** Merged per-bucket statistics — the index's bucket-balance
     * monitoring card (band_idx, band_val, bn, hub), bucket-
@@ -413,16 +374,17 @@ private[graft] trait MmIndexOps { this: Multimodal.type =>
     // past the limit keeps its keys DISTRIBUTED (shuffle joins — no
     // broadcast hint whose build side would land on the driver
     // anyway) and collects only the distinct bucket ids, bounded by
-    // nBuckets. limit(N+1) decides the route in one job.
-    val keyProbe = qBands.select(col("band_idx"), col("band_val"))
-      .distinct()
-      .withColumn("pb",
-        pmod(hash(col("band_idx"), col("band_val")), lit(nBuckets)))
-      .limit(localKeyLimit + 1).collect()
+    // nBuckets. Route.bounded decides the route in one job.
+    val keyProbe = Route.bounded(
+      qBands.select(col("band_idx"), col("band_val"))
+        .distinct()
+        .withColumn("pb",
+          pmod(hash(col("band_idx"), col("band_val")), lit(nBuckets))),
+      localKeyLimit)
     // a batch with no decodable media of this modality has no
     // near-dups — answer empty, like the MinHash serve, instead of
     // crashing a routine ingest loop on a text-only batch
-    if (keyProbe.isEmpty)
+    if (keyProbe.exists(_.isEmpty))
       return s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType(Seq(
@@ -432,7 +394,7 @@ private[graft] trait MmIndexOps { this: Multimodal.type =>
             org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("hamming",
             org.apache.spark.sql.types.LongType))))
-    val keysLocal = keyProbe.length <= localKeyLimit
+    val keysLocal = keyProbe.isDefined
     val keySchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("band_idx",
         org.apache.spark.sql.types.IntegerType),
@@ -440,18 +402,18 @@ private[graft] trait MmIndexOps { this: Multimodal.type =>
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("pb",
         org.apache.spark.sql.types.IntegerType)))
-    val (batchKeys, touchedPb) =
-      if (keysLocal)
-        (s.createDataFrame(java.util.Arrays.asList(keyProbe: _*),
+    val (batchKeys, touchedPb) = keyProbe match {
+      case Some(keys) =>
+        (s.createDataFrame(java.util.Arrays.asList(keys: _*),
           keySchema).drop("pb"),
-          keyProbe.map(_.getInt(2)).distinct)
-      else {
+          keys.map(_.getInt(2)).distinct)
+      case None =>
         val kd = qBands.select(col("band_idx"), col("band_val"))
           .distinct().pinned
         (kd, kd.select(pmod(hash(col("band_idx"), col("band_val")),
             lit(nBuckets)).as("pb"))
           .distinct().collect().map(_.getInt(0))) // <= nBuckets rows
-      }
+    }
     def hinted(df: DataFrame): DataFrame =
       if (keysLocal) broadcast(df) else df
     val (fs, root) = EmbeddingOps.fsFor(s, base)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 
 /** Lineage pinning for multi-consumer intermediates.
   *
@@ -59,11 +59,19 @@ private[graft] object Overlap {
   val TimeoutConf = "spark.graft.overlapTimeoutSec"
   val DefaultTimeoutSec = 3600L
 
+  /** The await bound from [[TimeoutConf]]. Callers resolve it BEFORE
+    * launching any work, so a malformed value refuses up front
+    * instead of surfacing after the overlapped jobs already ran. */
   def timeoutOf(s: org.apache.spark.sql.SparkSession)
-      : scala.concurrent.duration.FiniteDuration =
-    scala.concurrent.duration.Duration(
-      s.conf.get(TimeoutConf, DefaultTimeoutSec.toString).toLong,
+      : scala.concurrent.duration.FiniteDuration = {
+    val raw = s.conf.get(TimeoutConf, DefaultTimeoutSec.toString)
+    val sec = raw.toLongOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"$TimeoutConf must be a positive whole number of seconds, " +
+          s"got '$raw'"))
+    scala.concurrent.duration.Duration(sec,
       java.util.concurrent.TimeUnit.SECONDS)
+  }
 
   /** Run `body` with a fresh `n`-thread named daemon pool as its
     * ExecutionContext; the pool is always shut down on exit (threads
@@ -79,5 +87,20 @@ private[graft] object Overlap {
       })
     try body(scala.concurrent.ExecutionContext.fromExecutorService(pool))
     finally pool.shutdown()
+  }
+}
+
+/** The driver-side route decision of every cap-gated collect: ONE
+  * `limit(N+1)` job decides whether a frame fits the driver. N or
+  * fewer rows back means the collect IS the complete frame
+  * (`Some(rows)`, the driver-local route); N+1 rows means it outgrew
+  * the cap (`None`, the caller keeps it distributed). The +1
+  * saturates: a cap of Int.MaxValue must not wrap into a negative
+  * limit. */
+private[graft] object Route {
+  def bounded(frame: DataFrame, cap: Int): Option[Array[Row]] = {
+    val rows = frame.limit(if (cap == Int.MaxValue) cap else cap + 1)
+      .collect()
+    if (rows.length <= cap) Some(rows) else None
   }
 }

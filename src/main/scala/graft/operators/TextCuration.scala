@@ -2,8 +2,7 @@ package graft.operators
 
 import graft.operators.Stage.PinOps
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 // Packing row shapes: TOP-LEVEL case classes (not trait members) so
@@ -180,9 +179,10 @@ private[graft] trait TextCurationOps { this: TextOps.type =>
       benchT: Double = 0.9,
       benchmarkIndex: Option[String] = None,
       benchmarkAsOf: Option[IndexSnapshot] = None): Seq[(String, DataFrame)] = {
-    // contract checks BEFORE any stage materializes: every pin() is
-    // an eager localCheckpoint over the corpus, so a misuse reported
-    // at the gate would already have paid five stages of work
+    // contract checks BEFORE any stage materializes: the default pin
+    // (Stage.pinnedLazy) fills during the first job that consumes it
+    // and a caller's pin may be eager, so a misuse reported at the
+    // gate could already have paid five stages of work
     require(benchmark.isEmpty || benchmarkIndex.isEmpty,
       "pass benchmark OR benchmarkIndex, not both — they are two " +
         "routes to the same decontamination gate")

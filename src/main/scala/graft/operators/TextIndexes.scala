@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.operators.Stage.PinOps
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -212,14 +212,14 @@ private[graft] trait TextIndexOps { this: TextOps.type =>
       path: String, pred: org.apache.spark.sql.Column, what: String,
       cap: Int, asOf: Option[IndexSnapshot]): Seq[String] = {
     require(cap > 0, s"cap must be positive, got $cap")
-    val got = dictScan(s, path, asOf).where(pred)
-      .select(col("word")).distinct()
-      .limit(cap + 1).collect().map(_.getString(0))
-    require(got.length <= cap,
+    val got = Route.bounded(dictScan(s, path, asOf).where(pred)
+      .select(col("word")).distinct(), cap)
+    require(got.isDefined,
       s"more than $cap index terms match $what — narrow it or raise " +
         "the cap (resolved terms serve as a literal IN-list; an " +
         "unbounded match would collect the vocabulary)")
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(got.sorted)
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(
+      got.get.map(_.getString(0)).sorted)
   }
 
   /** BATCHED prefix serving — the batch-serving contract applied to
@@ -697,17 +697,15 @@ private[graft] trait TextIndexOps { this: TextOps.type =>
       localPairLimit: Int = 262144): DataFrame = {
     require(localPairLimit > 0, "localPairLimit must be positive")
     val qdf = queries.select(col("query_id"), col("word")).distinct()
-    // limit(N+1) decides the route in one job: fewer than N+1 rows
-    // back means the collect IS the complete pair set (saturating +1:
-    // a caller passing Int.MaxValue must not overflow into a
-    // negative limit)
-    val probe = qdf.limit(probeLimit(localPairLimit)).collect()
-    require(probe.nonEmpty, "query batch has no terms")
-    val (qw, qwBcast, terms) =
-      if (probe.length <= localPairLimit) {
-        (s.createDataFrame(java.util.Arrays.asList(probe: _*),
-          qdf.schema), true, probe.map(_.getString(1)).distinct.toSeq)
-      } else {
+    // one bounded probe decides the route: within the cap the
+    // collect IS the complete pair set
+    val probe = Route.bounded(qdf, localPairLimit)
+    require(probe.forall(_.nonEmpty), "query batch has no terms")
+    val (qw, qwBcast, terms) = probe match {
+      case Some(rows) =>
+        (s.createDataFrame(java.util.Arrays.asList(rows: _*),
+          qdf.schema), true, rows.map(_.getString(1)).distinct.toSeq)
+      case None =>
         // oversized batch: pairs stay distributed; the term union is
         // the only driver-side piece (the pruning IN-list needs it),
         // and it rides the CHECKPOINTED pair frame — recomputing the
@@ -717,7 +715,7 @@ private[graft] trait TextIndexOps { this: TextOps.type =>
         (qp, false,
           qp.select(col("word")).distinct().collect()
             .map(_.getString(0)).toSeq)
-      }
+    }
     val posts = bm25PostingsScan(s, path, terms, asOf)
       .pinned // df branch + scoring branch, one pruned scan
     val w = Window.partitionBy(col("query_id"))
@@ -745,6 +743,8 @@ private[graft] trait TextIndexOps { this: TextOps.type =>
     * tombstones, so compaction clears them. */
   def bm25IndexCompact(s: org.apache.spark.sql.SparkSession,
       path: String): Int = {
+    // resolved up front: a malformed conf refuses before any rewrite
+    val timeout = Overlap.timeoutOf(s)
     val (fs, root) = EmbeddingOps.fsFor(s, path)
     Warehouse.recoverSwap(fs, root)
     val metaDir = new org.apache.hadoop.fs.Path(root, "_segs")
@@ -821,7 +821,7 @@ private[graft] trait TextIndexOps { this: TextOps.type =>
               Some(e)
           }
         val totalsErr =
-          try { Await.result(totalsF, Overlap.timeoutOf(s)); None }
+          try { Await.result(totalsF, timeout); None }
           catch { case e: Throwable => Some(e) }
         rewriteErr.orElse(totalsErr).foreach(e => throw e)
       }
@@ -892,12 +892,6 @@ private[graft] trait TextIndexOps { this: TextOps.type =>
       .groupBy(col("band_idx"), col("band_hash"))
       .agg(sum(col("bn")).as("bn"), min(col("hub")).as("hub"))
   }
-
-  /** Saturating N+1 for the route-deciding limit probes: N+1 rows
-    * back means "more than the cap", N or fewer means the collect is
-    * the complete set. Int.MaxValue must not wrap negative. */
-  private def probeLimit(cap: Int): Int =
-    if (cap == Int.MaxValue) cap else cap + 1
 
   /** The `_posts` posting sidecar's read schema — explicit (no
     * inference jobs; an empty sidecar reads as the empty frame) and
@@ -976,7 +970,7 @@ private[graft] trait TextIndexOps { this: TextOps.type =>
         // exact AND overflow-proof: n_posts * n_buckets * 1000 can
         // exceed Long for a pathological bucket, and non-ANSI mode
         // would wrap silently — widen to DECIMAL(38,0) for the
-        // product (the probeLimit lesson). Integral `div`, not
+        // product (the Route.bounded lesson). Integral `div`, not
         // floor(/): decimal division ROUNDS at the capped result
         // scale, so floor over it goes off by one when the true
         // fraction sits within half an ulp of an integer from below
@@ -1068,7 +1062,7 @@ private[graft] trait TextIndexOps { this: TextOps.type =>
     * dir — the segment's publish rename commits them together,
     * keeping appends crash-atomic. */
   private def writeSegWithStats(s: org.apache.spark.sql.SparkSession,
-      rows: DataFrame, segDir: String, exact: Boolean = false): Unit = {
+      rows: DataFrame, segDir: String, exact: Boolean): Unit = {
     rows.write.mode("overwrite").parquet(segDir)
     writeMinhashSidecars(s, segDir, exact)
   }
@@ -1573,11 +1567,11 @@ private[graft] trait TextIndexOps { this: TextOps.type =>
   private def candidateRoute(s: org.apache.spark.sql.SparkSession,
       candAll: DataFrame, localPairLimit: Int): DataFrame = {
     require(localPairLimit > 0, "localPairLimit must be positive")
-    val probe = candAll.limit(probeLimit(localPairLimit)).collect()
-    if (probe.length <= localPairLimit)
-      broadcast(s.createDataFrame(
-        java.util.Arrays.asList(probe: _*), candAll.schema))
-    else candAll.pinned
+    Route.bounded(candAll, localPairLimit) match {
+      case Some(rows) => broadcast(s.createDataFrame(
+        java.util.Arrays.asList(rows: _*), candAll.schema))
+      case None => candAll.pinned
+    }
   }
 
   /** Delete docs from a persisted MinHash index — the [[graft.operators

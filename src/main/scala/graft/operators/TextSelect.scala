@@ -517,7 +517,7 @@ private[graft] trait TextSelectOps { this: TextOps.type =>
   val MixLocalSourceLimit = 65536
 
   private def mixTemperatureToks(toks: DataFrame, bySource: DataFrame,
-      q: Int, localSourceLimit: Int = MixLocalSourceLimit): DataFrame = {
+      q: Int, localSourceLimit: Int): DataFrame = {
     require(q >= 1 && q <= 6,
       s"temperature exponent q must be in [1, 6], got $q")
     require(localSourceLimit > 0, "localSourceLimit must be positive")
@@ -544,8 +544,8 @@ private[graft] trait TextSelectOps { this: TextOps.type =>
     // bounded LocalRelation whose broadcast builds driver-side for
     // free. Over the cap (domain-level mixing, unbounded sources by
     // contract) the distributed plan below runs unchanged.
-    val probe = rootsPlan.limit(mixProbeLimit(localSourceLimit)).collect()
-    if (probe.length <= localSourceLimit) {
+    val probe = Route.bounded(rootsPlan, localSourceLimit)
+    if (probe.isDefined) {
       // Driver-side mirror of the distributed arithmetic, exact by
       // construction: t_s and source_tokens arrive from the SAME
       // Spark expressions the distributed route aggregates (the probe
@@ -558,7 +558,7 @@ private[graft] trait TextSelectOps { this: TextOps.type =>
       // routes. The `div` quotients are BIGINT in the plan; a quotient
       // past 2^63 is the same >10^38-class envelope (null there,
       // exact here) and is unreachable at the 100 TB design point.
-      val rows = probe.toSeq.map { r =>
+      val rows = probe.get.toSeq.map { r =>
         val st = if (r.isNullAt(1)) None
           else Some(r.get(1).asInstanceOf[Number].longValue)
         val ts = if (r.isNullAt(2)) None
@@ -625,12 +625,6 @@ private[graft] trait TextSelectOps { this: TextOps.type =>
         .where(col("bucket") < col("keep_permille"))
     }
   }
-
-  /** Saturating N+1 for the route-deciding limit probe (the
-    * [[graft.operators.TextIndexes]] probeLimit rule): N+1 rows back
-    * means "over the cap", N or fewer means the collect is complete. */
-  private def mixProbeLimit(cap: Int): Int =
-    if (cap == Int.MaxValue) cap else cap + 1
 
   /** (doc_id, lhs, rhs, k) — each document's adjacent-bigram stream
     * with within-doc multiplicity, built per-row from the token array

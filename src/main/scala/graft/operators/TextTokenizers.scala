@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.operators.Stage.PinOps
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -259,7 +259,7 @@ private[graft] trait TextTokenizerOps { this: TextOps.type =>
     * segmentations): returns the final (word, seq, n) frame and the
     * per-round merge records. */
   private def bpeTrain(docs: DataFrame, rounds: Int,
-      minCount: Long = 1L)
+      minCount: Long)
       : (DataFrame, Seq[(Long, String, String, String, Long)]) = {
     val sep = BpeSep
     // 1-char words can never pair and never change: drop them up

@@ -24,9 +24,6 @@ object Warehouse {
       .mode("overwrite")
       .parquet(path)
 
-  def readFact(spark: SparkSession, path: String): DataFrame =
-    readPublished(spark, path)
-
   /** Read a table maintained by [[publishAudited]]/[[compact]],
     * healing the swap crash window FIRST: if the last publisher died
     * between its two renames, the table sits complete at `<path>.prev`

@@ -43,10 +43,6 @@ object JsonSource {
   def readListening(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(listeningSchema).json(path)
 
-  /** Streaming read of the same directory (S1 as a stream). */
-  def readListeningStream(spark: SparkSession, path: String): DataFrame =
-    spark.readStream.schema(listeningSchema).json(path)
-
   /** Schema of one raw recently-played API RESPONSE envelope
     * (spotify_client.py:260-262 reads `data['items']`): the collector
     * drops the response document VERBATIM — provenance-preserving —
@@ -146,15 +142,6 @@ object JsonSource {
     explodeEntries(
       spark.read.schema(albumsResponseSchema).json(path), "albums")
 
-  /** Audited S2 twins for the artist/album payloads. */
-  def readArtistProfilesAudited(spark: SparkSession, path: String)
-      : (DataFrame, DataFrame) =
-    auditedEnvelopeRead(spark, path, artistsResponseSchema, "artists")
-
-  def readAlbumCatalogAudited(spark: SparkSession, path: String)
-      : (DataFrame, DataFrame) =
-    auditedEnvelopeRead(spark, path, albumsResponseSchema, "albums")
-
   /** Schema of one audio-features RESPONSE envelope (S3;
     * spotify_client.py:300-321 reads `data['audio_features']` — the
     * array carries null entries for ids without features). */
@@ -242,12 +229,6 @@ object JsonSource {
   def readTrackDetailsAudited(spark: SparkSession, path: String)
       : (DataFrame, DataFrame) =
     auditedEnvelopeRead(spark, path, tracksResponseSchema, "tracks")
-
-  /** Audited S3 twin of [[readAudioFeatures]]. */
-  def readAudioFeaturesAudited(spark: SparkSession, path: String)
-      : (DataFrame, DataFrame) =
-    auditedEnvelopeRead(spark, path, audioFeaturesResponseSchema,
-      "audio_features")
 
   /** The ONE audited envelope read behind every `*Audited` reader:
     * (exploded entry rows, quarantined envelope lines). An envelope

@@ -110,17 +110,6 @@ private[graft] trait IndexIngestSinks { this: Streams.type =>
       (b, stamp) => Multimodal.phashIndexAppend(b, indexRoot,
         stamp = stamp))
 
-  /** [[phashIngestSink]] for an audio fingerprint index root. */
-  def audioIngestSink(media: DataFrame, indexRoot: String,
-      checkpointLocation: String, maintainEvery: Int = 0,
-      maxSegments: Int = 8)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    indexIngestSinkOf(media, indexRoot, checkpointLocation, "bands",
-      maintainEvery, () => Multimodal.bandedIndexMaintain(
-        media.sparkSession, indexRoot, maxSegments))(
-      (b, stamp) => Multimodal.audioIndexAppend(b, indexRoot,
-        stamp = stamp))
-
   /** Exactly-once streaming appends into a persisted IVF vector index
     * root (built by `EmbeddingOps.ivfIndexWrite`; batches assign
     * against the stored centroids — the fixed-quantizer `add`).
@@ -135,45 +124,9 @@ private[graft] trait IndexIngestSinks { this: Streams.type =>
       (b, stamp) => EmbeddingOps.ivfIndexAppend(b, indexRoot,
         stamp = stamp))
 
-  /** [[ivfIngestSink]] for a PQ index root (batches encode against
-    * the stored codebooks). */
-  def pqIngestSink(emb: DataFrame, indexRoot: String,
-      checkpointLocation: String, maintainEvery: Int = 0,
-      maxSegments: Int = 8)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    indexIngestSinkOf(emb, indexRoot, checkpointLocation, "codes",
-      maintainEvery, () => EmbeddingOps.pqIndexMaintain(
-        emb.sparkSession, indexRoot, maxSegments))(
-      (b, stamp) => EmbeddingOps.pqIndexAppend(b, indexRoot,
-        stamp = stamp))
-
-  /** [[ivfIngestSink]] for an IVF-PQ index root (coarse-assign +
-    * residual-encode against the stored quantizers). */
-  def ivfpqIngestSink(emb: DataFrame, indexRoot: String,
-      checkpointLocation: String, maintainEvery: Int = 0,
-      maxSegments: Int = 8)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    indexIngestSinkOf(emb, indexRoot, checkpointLocation, "codes",
-      maintainEvery, () => EmbeddingOps.ivfpqIndexMaintain(
-        emb.sparkSession, indexRoot, maxSegments))(
-      (b, stamp) => EmbeddingOps.ivfpqIndexAppend(b, indexRoot,
-        stamp = stamp))
-
-  /** [[ivfIngestSink]] for an SQ8 index root (batches clamp-encode
-    * against the stored ranges). */
-  def sq8IngestSink(emb: DataFrame, indexRoot: String,
-      checkpointLocation: String, maintainEvery: Int = 0,
-      maxSegments: Int = 8)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    indexIngestSinkOf(emb, indexRoot, checkpointLocation, "codes",
-      maintainEvery, () => EmbeddingOps.sq8IndexMaintain(
-        emb.sparkSession, indexRoot, maxSegments))(
-      (b, stamp) => EmbeddingOps.sq8IndexAppend(b, indexRoot,
-        stamp = stamp))
-
   private def indexIngestSinkOf(rows: DataFrame, indexRoot: String,
       checkpointLocation: String, canonicalDir: String,
-      maintainEvery: Int = 0, maintain: () => String = () => "none")
+      maintainEvery: Int, maintain: () => String)
       (append: (DataFrame, String => Unit) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
     require(maintainEvery >= 0,

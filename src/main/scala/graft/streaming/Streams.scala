@@ -1099,8 +1099,8 @@ object Streams extends IndexIngestSinks {
     * the copy and silently collapse a genuine spread. */
   private def registryAdditiveFoldSink(docs: DataFrame,
       statePath: String, checkpointLocation: String,
-      nShards: Int = DefaultStateShards,
-      params: Map[String, String] = Map.empty)(
+      nShards: Int,
+      params: Map[String, String])(
       gOf: DataFrame => DataFrame,
       gKeys: Seq[String], gCounts: Seq[String],
       contentHash: org.apache.spark.sql.Column)
@@ -1206,7 +1206,7 @@ object Streams extends IndexIngestSinks {
   private def versionedFoldSink(docs: DataFrame, statePath: String,
       checkpointLocation: String,
       shardOf: Int => org.apache.spark.sql.Column,
-      nShards: Int = DefaultStateShards,
+      nShards: Int,
       params: Map[String, String] = Map.empty)
       (incOf: DataFrame => DataFrame)
       (merge: (DataFrame, DataFrame) => DataFrame)
@@ -1504,10 +1504,6 @@ object Streams extends IndexIngestSinks {
     graft.operators.EmbeddingOps.tombstoneAppend(s, root, keyed, key,
       failpoint)
   }
-
-  /** [[foldState]] under its historical name — the exact-dedup reader. */
-  def dedupState(s: org.apache.spark.sql.SparkSession,
-      statePath: String): DataFrame = foldState(s, statePath)
 
   /** Consolidate a fold state's manifest chain — the maintenance twin
     * of Warehouse.compact for [[versionedFoldSink]] states. After many

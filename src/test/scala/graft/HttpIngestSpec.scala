@@ -666,4 +666,44 @@ class HttpIngestSpec extends SparkSpec {
         s"HTTP-date Retry-After must parse relatively: $slept")
     } finally server.stop(0)
   }
+
+  test("Collector facade: artist profiles and audio features fan out " +
+    "under their per-call id caps") {
+    // S2 artists <= 50 ids per call, S3 audio features <= 100
+    // (curl_spotify_tracker.py:303-320, spotify_client.py:300-321)
+    val chunks = ArrayBuffer[(String, Seq[String])]()
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/api/token", ex => respond(ex, 200,
+      """{"access_token":"tok","expires_in":3600}"""))
+    Seq("/v1/artists", "/v1/audio-features").foreach { path =>
+      server.createContext(path, ex => {
+        val ids = Option(ex.getRequestURI.getQuery).getOrElse("")
+          .split("&").collectFirst {
+            case kv if kv.startsWith("ids=") => kv.drop(4).split(",").toSeq
+          }.getOrElse(Seq.empty)
+        chunks += path -> ids
+        respond(ex, 200, s"""{"n":${ids.size}}""")
+      })
+    }
+    server.setExecutor(null)
+    server.start()
+    try {
+      val port = server.getAddress.getPort
+      val client = new Collector(s"http://127.0.0.1:$port/v1",
+        new IngestClient.TokenManager(() => IngestClient
+          .refreshAccessToken(s"http://127.0.0.1:$port/api/token", "id",
+            "secret", "refresh"), now = () => 0L),
+        sleep = _ => ())
+      val artistIds = (1 to 120).map(i => s"ar$i")
+      assert(client.artistProfiles(artistIds) ==
+        Seq("""{"n":50}""", """{"n":50}""", """{"n":20}"""))
+      val featureIds = (1 to 230).map(i => s"t$i")
+      assert(client.audioFeatures(featureIds) ==
+        Seq("""{"n":100}""", """{"n":100}""", """{"n":30}"""))
+      assert(chunks.map(_._1).toSeq == Seq.fill(3)("/v1/artists") ++
+        Seq.fill(3)("/v1/audio-features"))
+      assert(chunks.flatMap(_._2).toSeq == artistIds ++ featureIds,
+        "every id is fetched once, in order")
+    } finally server.stop(0)
+  }
 }

@@ -275,4 +275,45 @@ class HybridSpec extends SparkSpec {
       .sameElements(lexBefore),
       "retainEpochs=2 must carry a manifest entry through two swaps")
   }
+
+  test("a malformed overlap timeout refuses before any job starts, at " +
+    "the hybrid serve and at the BM25 compaction") {
+    val bmIdx = freshDir("otimeout_bm25_idx")
+    val pqIdx = freshDir("otimeout_ivfpq_idx")
+    TextOps.bm25IndexWrite(corpus.where($"doc_id" < 200), bmIdx)
+    TextOps.bm25IndexAppend(corpus.where($"doc_id" >= 200), bmIdx)
+    EmbeddingOps.ivfpqIndexWrite(emb, pqIdx)
+    val qw = termQueries(2, 8).localCheckpoint()
+    val vq = emb.where($"vec_id" < 2)
+    val conf = "spark.graft.overlapTimeoutSec"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def refusal(body: => Any): String =
+      intercept[IllegalArgumentException](body).getMessage
+    spark.conf.set(conf, "abc")
+    spark.sparkContext.addSparkListener(listener)
+    val msgs = try {
+      Seq(refusal(Hybrid.hybridTopKIndexed(spark, bmIdx, pqIdx, qw, vq)),
+        refusal(TextOps.bm25IndexCompact(spark, bmIdx)))
+    } finally {
+      Thread.sleep(1000) // listener events deliver asynchronously
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.unset(conf)
+    }
+    msgs.foreach(m => assert(m.contains(conf) && m.contains("abc"), m))
+    assert(jobs.get() == 0, s"${jobs.get()} jobs ran before the refusal")
+    Seq("0", "-5").foreach { v =>
+      spark.conf.set(conf, v)
+      try assert(refusal(TextOps.bm25IndexCompact(spark, bmIdx))
+        .contains(conf))
+      finally spark.conf.unset(conf)
+    }
+    // nothing was half-done: the untouched root still compacts
+    assert(TextOps.bm25IndexCompact(spark, bmIdx) == 2)
+  }
 }

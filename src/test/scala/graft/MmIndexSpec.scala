@@ -35,6 +35,15 @@ class MmIndexSpec extends SparkSpec {
       fresh)
     val rows = served(idx)
     assert(rows.nonEmpty, "the lifecycle fixture must be non-vacuous")
+    // the batch-key route: Int.MaxValue must not wrap the probe's +1
+    // negative, and the keyed fallback (localKeyLimit = 1) serves the
+    // default-cap rows too
+    Seq(Int.MaxValue, 1).foreach { limit =>
+      assert(Multimodal.phashNearDupServe(spark, idx,
+          media.where(col("doc_id") % 3 === 2), localKeyLimit = limit)
+        .collect().map(_.toString).sorted.sameElements(rows),
+        s"image route at localKeyLimit = $limit != default")
+    }
     assert(rows.sameElements(served(fresh)),
       "a write+append index must serve identically to a rebuild")
     // merged 2-segment stats == the fresh single segment's stats
@@ -131,31 +140,39 @@ class MmIndexSpec extends SparkSpec {
     assert(rows.nonEmpty, "the audio fixture must be non-vacuous")
     assert(rows.sameElements(serve(fresh)),
       "audio write+append must serve identically to a rebuild")
+    // the batch-key route: Int.MaxValue must not wrap the probe's +1
+    // negative, and the keyed fallback (localKeyLimit = 1) serves the
+    // default-cap rows too
+    Seq(Int.MaxValue, 1).foreach { limit =>
+      assert(Multimodal.audioDupServe(spark, idx,
+          am.where(col("doc_id") % 7 === 0), localKeyLimit = limit)
+        .collect().map(_.toString).sorted.sameElements(rows),
+        s"audio route at localKeyLimit = $limit != default")
+    }
     // exact-match contract: every served pair is hamming 0 and the
     // pair really does share the fingerprint (self-consistency with
     // the batch operator's exact blocking)
     assert(Multimodal.audioDupServe(spark, idx,
         am.where(col("doc_id") % 7 === 0))
       .collect().forall(_.getAs[Long]("hamming") == 0L))
-    // the shared maintenance doors under their FAMILY-NEUTRAL names
-    // (bandedIndex* — honest spellings for an audio root; byte-equal
-    // delegates of the phash-named doors): delete a doc_a that
-    // currently answers, compact, serve identical
+    // the phash-named maintenance doors serve any banded root, the
+    // audio one included: delete a doc_a that currently answers,
+    // compact, serve identical
     val victim = rows.head.stripPrefix("[").split(",")(0).toLong
-    Multimodal.bandedIndexDelete(spark, idx,
+    Multimodal.phashIndexDelete(spark, idx,
       spark.range(victim, victim + 1).select(col("id").as("doc_id")))
     val afterDel = serve(idx)
     assert(!afterDel.exists(_.startsWith(s"[$victim,")),
       "tombstoned audio doc must leave the serve immediately")
-    assert(Multimodal.bandedIndexCompact(spark, idx) >= 1)
+    assert(Multimodal.phashIndexCompact(spark, idx) >= 1)
     assert(serve(idx).sameElements(afterDel),
       "compaction changed the audio serve")
-    // the stats card reads the same sidecars either way
-    assert(Multimodal.bandedIndexStats(spark, idx).collect()
+    // the stats card reads the compacted sidecars the same way twice
+    assert(Multimodal.phashIndexStats(spark, idx).collect()
       .map(_.toString).sorted.sameElements(
         Multimodal.phashIndexStats(spark, idx).collect()
           .map(_.toString).sorted),
-      "bandedIndexStats must be byte-equal to its phash alias")
+      "phashIndexStats must read the same sidecars identically")
   }
 
   test("an indexed template-image cluster answers through its hub " +
@@ -208,14 +225,14 @@ class MmIndexSpec extends SparkSpec {
     val idx = freshDir("phash_allempty")
     Multimodal.phashIndexWrite(junkA, idx)
     Multimodal.phashIndexAppend(junkB, idx)
-    Multimodal.bandedIndexDelete(spark, idx,
+    Multimodal.phashIndexDelete(spark, idx,
       spark.range(2L).select(col("id").as("doc_id")))
-    assert(Multimodal.bandedIndexCompact(spark, idx) >= 1,
+    assert(Multimodal.phashIndexCompact(spark, idx) >= 1,
       "two empty segments + tombstones must compact, not crash")
     assert(Multimodal.phashNearDupServe(spark, idx,
         media.where(col("doc_id") < 30)).count() === 0L,
       "the compacted empty index must serve empty")
-    assert(Multimodal.bandedIndexStats(spark, idx).count() === 0L)
+    assert(Multimodal.phashIndexStats(spark, idx).count() === 0L)
     // legacy-segment guidance: drop the compacted segment's _pstats
     // sidecar and the stats door must name the repair
     val root = new org.apache.hadoop.fs.Path(idx)
@@ -223,7 +240,7 @@ class MmIndexSpec extends SparkSpec {
     fs.delete(new org.apache.hadoop.fs.Path(idx, "bands/seg=0/_pstats"),
       true)
     val e = intercept[IllegalArgumentException] {
-      Multimodal.bandedIndexStats(spark, idx).count()
+      Multimodal.phashIndexStats(spark, idx).count()
     }
     assert(e.getMessage.contains("rebuild or compact the index"),
       s"expected the guided sidecar refusal, got: ${e.getMessage}")

@@ -32,7 +32,7 @@ class StreamDedupParitySpec extends SparkSpec {
       .start()
     assert(q.awaitTermination(180000), "stream did not finish in time")
 
-    val got = Streams.dedupState(spark, statePath)
+    val got = Streams.foldState(spark, statePath)
       .collect().map(_.toString).sorted
     assert(got.length == expected.length)
     assert(got.sameElements(expected))
@@ -469,7 +469,7 @@ class StreamDedupParitySpec extends SparkSpec {
     java.nio.file.Files.createDirectories(partial)
     java.nio.file.Files.write(partial.resolve("part-00000-junk"),
       Array[Byte](1, 2, 3))
-    val got = Streams.dedupState(spark, statePath)
+    val got = Streams.foldState(spark, statePath)
       .collect().map(_.toString).sorted
     assert(got.sameElements(committed.collect().map(_.toString).sorted))
   }

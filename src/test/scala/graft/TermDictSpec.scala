@@ -151,6 +151,21 @@ class TermDictSpec extends SparkSpec {
     assert(e.getMessage.contains("more than 2 index terms"))
     assert(TextOps.termsMatchingPrefix(spark, root, "s", cap = 64)
       .nonEmpty)
+    // the bounded probe's +1 saturates: cap = Int.MaxValue resolves
+    // like the default cap on every resolution door and the serve
+    val max = Int.MaxValue
+    assert(TextOps.termsMatchingPrefix(spark, root, "s", cap = max) ==
+      TextOps.termsMatchingPrefix(spark, root, "s"))
+    assert(TextOps.termsMatchingLike(spark, root, "%or%", cap = max) ==
+      TextOps.termsMatchingLike(spark, root, "%or%"))
+    assert(TextOps.termsMatchingFuzzy(spark, root, "sord", cap = max) ==
+      TextOps.termsMatchingFuzzy(spark, root, "sord"))
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    val dflt = rows(TextOps.bm25TopKPrefix(spark, root, "s"))
+    assert(dflt.nonEmpty, "the fixture prefix must match")
+    assert(rows(TextOps.bm25TopKPrefix(spark, root, "s", cap = max)) ==
+      dflt)
 
     val e2 = intercept[IllegalArgumentException] {
       TextOps.termsMatchingPrefix(spark, root, "")

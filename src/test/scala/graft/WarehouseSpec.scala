@@ -30,7 +30,7 @@ class WarehouseSpec extends SparkSpec {
       .filter(_.getName.startsWith("date_key=")).map(_.getName).sorted
     assert(parts.length == 6)
 
-    val fact = Warehouse.readFact(spark, dir)
+    val fact = Warehouse.readPublished(spark, dir)
     val slice = Warehouse.lastDays(fact,
       java.time.LocalDate.of(2024, 1, 6), days = 2)
     // correctness of the slice
@@ -114,7 +114,7 @@ class WarehouseSpec extends SparkSpec {
       Warehouse.compact(spark, dir))
     assert(ex.getMessage.contains("partition"), ex.getMessage)
     // untouched
-    assert(Warehouse.readFact(spark, dir).count() == 2)
+    assert(Warehouse.readPublished(spark, dir).count() == 2)
   }
 
   test("compactPartitions compacts each leaf losslessly, invisibly to readers") {
@@ -127,7 +127,7 @@ class WarehouseSpec extends SparkSpec {
     // manufacture the small-files problem INSIDE each partition
     StarSchema.fact(c).repartition(12).write
       .partitionBy("date_key").mode("overwrite").parquet(dir)
-    val before = Warehouse.readFact(spark, dir)
+    val before = Warehouse.readPublished(spark, dir)
     val rows = before.count()
     val values = before.collect().map(_.toString).sorted
     def leafFiles(day: Int) = new java.io.File(s"$dir/date_key=2024010$day")
@@ -141,7 +141,7 @@ class WarehouseSpec extends SparkSpec {
     assert(compacted.values.forall(_ == 1))
     assert((1 to 3).forall(leafFiles(_) == 1))
     // lossless, partition column intact, no visible staging debris
-    val after = Warehouse.readFact(spark, dir)
+    val after = Warehouse.readPublished(spark, dir)
     assert(after.count() == rows)
     assert(after.collect().map(_.toString).sorted.sameElements(values))
     val stray = new java.io.File(dir).listFiles()
@@ -168,7 +168,7 @@ class WarehouseSpec extends SparkSpec {
     val recompacted = Warehouse.compactPartitions(spark, dir,
       targetBytes = 1L << 30)
     assert(recompacted == compacted) // same three leaves, healed
-    assert(Warehouse.readFact(spark, dir).count() == rows)
+    assert(Warehouse.readPublished(spark, dir).count() == rows)
     assert(!new java.io.File(s"$dir/.date_key=20240102.prev").exists())
   }
 
@@ -301,8 +301,8 @@ class WarehouseSpec extends SparkSpec {
     assert(healed.count() == 2)
     assert(new java.io.File(base).exists())
     assert(!new java.io.File(hiddenName(base, ".prev")).exists())
-    // healing is idempotent, and readFact routes through it
-    assert(Warehouse.readFact(spark, base).count() == 2)
+    // healing is idempotent, and readPublished routes through it
+    assert(Warehouse.readPublished(spark, base).count() == 2)
   }
 
   test("raw SQL entry point matches the DataFrame result (S12)") {
