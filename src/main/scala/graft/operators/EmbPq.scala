@@ -25,37 +25,6 @@ private[graft] trait EmbPqOps { this: EmbeddingOps.type =>
       df => df.repartition(col("cell"))
         .write.partitionBy("cell").mode("overwrite"))
 
-  /** [[ivfIndexCompactTail]] for the PQ code layout. */
-  def pqIndexCompactTail(s: org.apache.spark.sql.SparkSession,
-      path: String, maxSegments: Int = 4,
-      failpoint: String => Unit = _ => ()): Int =
-    tailCompactSegments(s, path, "codes",
-      df => df.write.mode("overwrite"),
-      maxSegments = maxSegments, failpoint = failpoint)
-
-  /** [[ivfIndexCompactTail]] for the IVF-PQ layout. */
-  def ivfpqIndexCompactTail(s: org.apache.spark.sql.SparkSession,
-      path: String, maxSegments: Int = 4,
-      failpoint: String => Unit = _ => ()): Int =
-    tailCompactSegments(s, path, "codes",
-      df => df.repartition(col("cell"))
-        .write.partitionBy("cell").mode("overwrite"),
-      maxSegments = maxSegments, failpoint = failpoint)
-
-  /** [[ivfIndexMaintain]] for the PQ root. */
-  def pqIndexMaintain(s: org.apache.spark.sql.SparkSession,
-      path: String, maxSegments: Int = 4): String =
-    maintainIndexWith(s, path, maxSegments)(
-      pqIndexCompactTail(s, path, maxSegments))(
-      pqIndexCompact(s, path))
-
-  /** [[ivfIndexMaintain]] for the IVF-PQ root. */
-  def ivfpqIndexMaintain(s: org.apache.spark.sql.SparkSession,
-      path: String, maxSegments: Int = 4): String =
-    maintainIndexWith(s, path, maxSegments)(
-      ivfpqIndexCompactTail(s, path, maxSegments))(
-      ivfpqIndexCompact(s, path))
-
   private val PqM = 4
 
   private def PqSubDim = Dim / PqM // def, not val: Dim lives in the object body, which initializes AFTER the traits

@@ -345,28 +345,6 @@ private[graft] trait EmbTierOps { this: EmbeddingOps.type =>
     * STORED ranges (the quantizer is fixed at build time — the faiss
     * `add` contract; out-of-range values CLAMP to the byte domain),
     * one crash-atomic segment, O(batch) IO. */
-  /** [[ivfIndexCompact]] for the SQ8 code layout (the `ranges` table
-    * carries over verbatim — the quantizer is fixed at build). */
-  def sq8IndexCompact(s: org.apache.spark.sql.SparkSession,
-      path: String): Int =
-    compactSegments(s, path, "codes", Seq("ranges"),
-      df => df.write.mode("overwrite"))
-
-  /** [[ivfIndexCompactTail]] for the SQ8 code layout. */
-  def sq8IndexCompactTail(s: org.apache.spark.sql.SparkSession,
-      path: String, maxSegments: Int = 4,
-      failpoint: String => Unit = _ => ()): Int =
-    tailCompactSegments(s, path, "codes",
-      df => df.write.mode("overwrite"),
-      maxSegments = maxSegments, failpoint = failpoint)
-
-  /** [[ivfIndexMaintain]] for the SQ8 root. */
-  def sq8IndexMaintain(s: org.apache.spark.sql.SparkSession,
-      path: String, maxSegments: Int = 4): String =
-    maintainIndexWith(s, path, maxSegments)(
-      sq8IndexCompactTail(s, path, maxSegments))(
-      sq8IndexCompact(s, path))
-
   def sq8IndexAppend(emb: DataFrame, path: String,
       failpoint: String => Unit = _ => (),
       stamp: String => Unit = _ => ()): Unit = {

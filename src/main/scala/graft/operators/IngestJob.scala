@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Stage.PinOps
 import graft.sources.JsonSource
 
 /** EP1 — the collector (dags/spotify/curl_spotify_tracker.py:402-732)
@@ -95,7 +96,16 @@ object IngestJob {
     val ledger = state.map(_.playLedger.unionByName(ledgerRow))
       .getOrElse(ledgerRow)
 
-    RawZone(plays, catalog, ledger, seq + 1)
+    // Truncate lineage on the carried zones, as EtlJob.run does: each
+    // zone is merged onto the previous one, so unpinned the next run's
+    // writes would re-read and re-merge every earlier drop (O(N^2)
+    // across N drops). The pins are LAZY (Stage.pinnedLazy) so the
+    // caller's zone write fills them and no extra job runs. Deferring
+    // the fill is safe: a drop's files are immutable once read, and
+    // the forget-ledger's segment list was fixed when this call
+    // planned the filter above, so a later fill sees the same input.
+    RawZone(plays.pinnedLazy, catalog.pinnedLazy, ledger.pinnedLazy,
+      seq + 1)
   }
 
   /** S2's payload landing — merge batch track-details docs
@@ -151,6 +161,8 @@ object IngestJob {
           .as("popularity"),
         when(col("d_hit").isNotNull, lit(seq))
           .otherwise(col("ingest_batch")).as("ingest_batch"))
-    zone.copy(trackCatalog = merged, nextSeq = seq + 1)
+    // lazily pinned for the reasons given in [[run]]; a details
+    // drop's files are immutable too
+    zone.copy(trackCatalog = merged.pinnedLazy, nextSeq = seq + 1)
   }
 }

@@ -286,27 +286,16 @@ class HybridSpec extends SparkSpec {
     val qw = termQueries(2, 8).localCheckpoint()
     val vq = emb.where($"vec_id" < 2)
     val conf = "spark.graft.overlapTimeoutSec"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     def refusal(body: => Any): String =
       intercept[IllegalArgumentException](body).getMessage
     spark.conf.set(conf, "abc")
-    spark.sparkContext.addSparkListener(listener)
-    val msgs = try {
-      Seq(refusal(Hybrid.hybridTopKIndexed(spark, bmIdx, pqIdx, qw, vq)),
+    var msgs = Seq.empty[String]
+    val jobs = try countJobs {
+      msgs = Seq(refusal(Hybrid.hybridTopKIndexed(spark, bmIdx, pqIdx, qw, vq)),
         refusal(TextOps.bm25IndexCompact(spark, bmIdx)))
-    } finally {
-      Thread.sleep(1000) // listener events deliver asynchronously
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.unset(conf)
-    }
+    } finally spark.conf.unset(conf)
     msgs.foreach(m => assert(m.contains(conf) && m.contains("abc"), m))
-    assert(jobs.get() == 0, s"${jobs.get()} jobs ran before the refusal")
+    assert(jobs == 0, s"$jobs jobs ran before the refusal")
     Seq("0", "-5").foreach { v =>
       spark.conf.set(conf, v)
       try assert(refusal(TextOps.bm25IndexCompact(spark, bmIdx))

@@ -89,6 +89,37 @@ class IngestJobSpec extends SparkSpec {
     assert(state.get.playLedger.count() == 11)
   }
 
+  test("a drop's job count does not grow with the drops before it: " +
+    "the carried zones are pinned") {
+    // six drops of 20 plays over 30 tracks; each re-sends five plays
+    // of the drop before it, so every merge has replays to absorb
+    def play(d: Int, i: Int): String =
+      doc(s"t${(d * 7 + i) % 30}", f"2024-01-${d + 1}%02dT${i}%02d:00:00Z",
+        s"Song$i", d * 10 + i)
+    val drops = (0 until 6).map(d => readDocs(
+      (0 until 20).map(play(d, _)) ++
+        (if (d > 0) (15 until 20).map(play(d - 1, _)) else Nil)))
+    val out = java.nio.file.Files.createTempDirectory("graft_zone")
+    var zone: Option[IngestJob.RawZone] = None
+    val jobs = drops.zipWithIndex.map { case (raw, d) =>
+      countJobs {
+        val z = IngestJob.run(zone, raw, s"b$d")
+        z.plays.write.mode("overwrite").parquet(s"$out/plays")
+        z.trackCatalog.write.mode("overwrite").parquet(s"$out/catalog")
+        z.playLedger.write.mode("overwrite").parquet(s"$out/ledger")
+        zone = Some(z)
+      }
+    }
+    info(s"jobs per drop: ${jobs.mkString("/")}")
+    assert(jobs.drop(2).forall(_ <= jobs(1)),
+      s"jobs per drop ${jobs.mkString("/")}: a drop re-runs the " +
+        "drops before it")
+    // the pins change no result: every distinct play and track lands
+    assert(spark.read.parquet(s"$out/plays").count() == 6 * 20)
+    assert(spark.read.parquet(s"$out/catalog").count() == 30)
+    assert(spark.read.parquet(s"$out/ledger").count() == 6)
+  }
+
   test("enrichCatalog drops a details entry whose struct has a NULL id") {
     import spark.implicits._
     val zone = IngestJob.run(None,

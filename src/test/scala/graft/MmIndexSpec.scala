@@ -167,12 +167,20 @@ class MmIndexSpec extends SparkSpec {
     assert(Multimodal.phashIndexCompact(spark, idx) >= 1)
     assert(serve(idx).sameElements(afterDel),
       "compaction changed the audio serve")
-    // the stats card reads the compacted sidecars the same way twice
+    // the stats card over the compacted sidecars equals the live
+    // audio docs bucketed by fingerprint: one band per doc, bn = the
+    // docs sharing it, hub = the smallest of them
+    val liveAudio = Multimodal.audioHash(
+        am.where(col("doc_id") % 7 =!= 0 && col("doc_id") =!= victim))
+      .where(col("kind") === "audio")
+    val expected = liveAudio.groupBy(col("h"))
+      .agg(count(lit(1)).as("bn"), min(col("doc_id")).as("hub"))
+      .collect().map(r => s"0,${r.get(0)},${r.get(1)},${r.get(2)}").sorted
     assert(Multimodal.phashIndexStats(spark, idx).collect()
-      .map(_.toString).sorted.sameElements(
-        Multimodal.phashIndexStats(spark, idx).collect()
-          .map(_.toString).sorted),
-      "phashIndexStats must read the same sidecars identically")
+        .map(r => s"${r.get(0)},${r.get(1)},${r.get(2)},${r.get(3)}")
+        .sorted.sameElements(expected),
+      "phashIndexStats must hold one (fingerprint, bn, hub) row per " +
+        "live fingerprint")
   }
 
   test("an indexed template-image cluster answers through its hub " +

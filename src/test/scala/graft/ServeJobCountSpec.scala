@@ -21,31 +21,6 @@ import graft.operators.{EmbeddingOps, Hybrid, IndexMetaCache, TextOps}
   * re-introduction of per-serve metadata jobs. */
 class ServeJobCountSpec extends SparkSpec {
 
-  private final class JobCounter
-      extends org.apache.spark.scheduler.SparkListener {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    override def onJobStart(
-        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      jobs.incrementAndGet(); ()
-    }
-  }
-
-  private def countJobs(body: => Unit): Int = {
-    val c = new JobCounter
-    spark.sparkContext.addSparkListener(c)
-    try {
-      body
-      // listener events deliver asynchronously; settle briefly
-      var last = -1
-      var now = c.jobs.get()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (now != last && System.nanoTime() < deadline) {
-        Thread.sleep(100); last = now; now = c.jobs.get()
-      }
-      now
-    } finally spark.sparkContext.removeSparkListener(c)
-  }
-
   test("a warm serve plans no more jobs than a cold one, and the " +
     "warm hybrid stays far under the pre-cache shape") {
     val docs = Tables(spark, "/root/testdata/sf0.001").documents.toDF()

@@ -27,6 +27,24 @@ trait SparkSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
   }
 
+  /** Spark jobs launched while `body` runs, counted by a listener
+    * once every event posted so far is delivered. */
+  def countJobs(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.SpecProbe.drain(spark.sparkContext)
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   /** embeddings-shaped frame. */
   def embDf(rows: Seq[(Long, Seq[Float], Int)]): DataFrame = {
     import spark.implicits._
