@@ -1,9 +1,13 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.Stage.PinOps
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 
 /** EP2 — the daily ETL pipeline as one composed, incremental,
   * idempotent job (dags/spotify/daily_etl_pipeline.py:808-821
@@ -39,7 +43,7 @@ object EtlJob {
       dimTypes: DataFrame,
       dimDates: DataFrame,
       dailyStats: DataFrame,
-      ledger: DataFrame,
+      ledger: DataFrame, // batch_execution_log, a driver-local frame
       // incremental dim accumulators — each run folds ONLY the new
       // batch into these compact frames (per-(user, active-date) event
       // counts; per-type min/sum stats); dims derive from them without
@@ -47,19 +51,34 @@ object EtlJob {
       userDayCounts: DataFrame,
       typeStats: DataFrame)
 
-  /** One incremental run. `state=None` bootstraps from the batch. */
+  /** One incremental run. `state=None` bootstraps from the batch.
+    *
+    * The batch is read ONCE: `cleanBatch` is the only frame over
+    * `rawBatch`, and it is pinned eagerly here, so a caller may hand in
+    * a micro-batch or a mutable source and change it after `run`
+    * returns. The same pin job fills the batch's ledger row through an
+    * observation, so the ledger is a driver-local frame that costs no
+    * job to read. Every carried frame is pinned LAZILY: the caller's
+    * first read fills it, with no pin job of its own. That is safe
+    * because each of their inputs is already a pin (the batch pin or
+    * the previous state's pins), so a late fill reads the same rows an
+    * eager one would. */
   def run(state: Option[EtlState], rawBatch: DataFrame,
       batchId: String): EtlState = {
     // P1-P3 projection, then the layered upsert-key protection (J2):
     // collapse in-batch duplicates, drop rows the target already has.
+    val seen = Observation()
     val cleanBatch = Sinks.insertIfAbsent(
       state.map(_.clean).getOrElse(
         StarSchema.clean(rawBatch).limit(0)),
       StarSchema.clean(rawBatch),
       Seq("user_id", "ts"), "event_id")
+      .observe(seen, count(lit(1)).as("records_processed"),
+        max(col("ts")).as("high_watermark"))
+      .pinned
 
     val mergedClean = state match {
-      case Some(s) => s.clean.unionByName(cleanBatch)
+      case Some(s) => s.clean.unionByName(cleanBatch).pinnedLazy
       case None => cleanBatch
     }
 
@@ -114,17 +133,32 @@ object EtlJob {
       case None => batchTypeStats
     }
 
-    // Truncate lineage on the carried frames (localCheckpoint): without
-    // it each run unions onto an ever-deeper plan and every action
-    // replays ALL prior batches — O(N^2) across N batches and an
-    // eventual StackOverflow in analysis. A production deployment
-    // writes these to tables; localCheckpoint is the in-memory
-    // equivalent (blocks are freed when the state is dropped).
-    val userDayCp = userDayCounts.pinned
-    val typeStatsCp = typeStats.pinned
+    // Truncate lineage on the carried frames: without it each run
+    // unions onto an ever-deeper plan and every action replays ALL
+    // prior batches — O(N^2) across N batches and an eventual
+    // StackOverflow in analysis. A production deployment writes these
+    // to tables; a pin is the in-memory equivalent (blocks are freed
+    // when the state is dropped). The batch pin above is the only
+    // EAGER one: it captures the caller's source and delivers the
+    // observation. The rest are lazy (see the scaladoc): the caller's
+    // publish fills them.
+    val userDayCp = userDayCounts.pinnedLazy
+    val typeStatsCp = typeStats.pinnedLazy
+
+    // The ledger (batch_execution_log) lives on the driver: the
+    // previous rows plus this batch's row, read from the observation
+    // the batch pin filled. A pure replay logs 0 rows and a null mark.
+    val m = seen.get
+    val ledgerSchema = StructType(Seq(
+      StructField("batch_id", StringType, nullable = false),
+      StructField("records_processed", LongType, nullable = false),
+      StructField("high_watermark", cleanBatch.schema("ts").dataType)))
+    val ledgerRows = state.toSeq.flatMap(_.ledger.collect()) :+
+      Row(batchId, m("records_processed"), m("high_watermark"))
+
     EtlState(
-      clean = mergedClean.pinned,
-      fact = fact.pinned,
+      clean = mergedClean,
+      fact = fact.pinnedLazy,
       // dims derived from the accumulators — identical to
       // StarSchema.dim* over the full merged clean (pinned by spec),
       // but each run's aggregation input is the compact accumulator,
@@ -142,15 +176,9 @@ object EtlJob {
         StarSchema.typeKey(col("event_type")).as("type_key"),
         col("event_type"), col("first_seen"), col("total_events")),
       dimDates = StarSchema.dimDates(userDayCp),
-      dailyStats = dailyStats.pinned,
-      ledger = {
-        val row = cleanBatch
-          .agg(count(lit(1)).as("records_processed"),
-            max(col("ts")).as("high_watermark"))
-          .select(lit(batchId).as("batch_id"), col("records_processed"),
-            col("high_watermark"))
-        state.map(_.ledger.unionByName(row)).getOrElse(row)
-      },
+      dailyStats = dailyStats.pinnedLazy,
+      ledger = rawBatch.sparkSession.createDataFrame(
+        ledgerRows.asJava, ledgerSchema),
       userDayCounts = userDayCp,
       typeStats = typeStatsCp)
   }

@@ -33,11 +33,14 @@ private[graft] object Stage {
       * and later consumers read them back like any checkpoint — same
       * data, same lineage truncation, one fewer job per pin site.
       * Right for a strictly SEQUENTIAL chain whose next stage always
-      * consumes the previous one (the curate funnel). NOT a drop-in
-      * for `pinned` everywhere: sites that pin to capture a mutable
-      * source before a swap (the index maintenance doors) or hand
-      * the frame to concurrent driver threads (the overlap sites)
-      * rely on eager, single-threaded materialization. */
+      * consumes the previous one (the curate funnel), and for carried
+      * state whose inputs are all pins already (EtlJob's carried
+      * frames): a late fill reads the same rows an eager one would.
+      * NOT a drop-in for `pinned` everywhere: sites that pin to
+      * capture a mutable source before a swap (the index maintenance
+      * doors, EtlJob's batch pin) or hand the frame to concurrent
+      * driver threads (the overlap sites) rely on eager,
+      * single-threaded materialization. */
     def pinnedLazy: Dataset[T] =
       if (ds.sparkSession.conf.get(ReliableFlag, "false").toBoolean)
         ds.checkpoint(eager = false)

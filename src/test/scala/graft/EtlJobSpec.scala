@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{EtlJob, StarSchema}
+import graft.operators.{EtlJob, Stage, StarSchema}
 
 /** SURVEY.md §5.4 pipeline replay: day-sliced incremental runs (with
   * overlapping/duplicate deliveries) must converge to the same star
@@ -23,13 +23,14 @@ class EtlJobSpec extends SparkSpec {
       .map(_.toString).toSeq.sorted
   }
 
-  test("incremental day-sliced replay converges to the full-batch state") {
-    val full = EtlJob.run(None, events, "full")
+  private def day(n: Int): DataFrame =
+    events.where(to_date($"ts") === s"2024-01-0$n")
 
-    // day slices, delivered with day-2 duplicated across two batches
-    val d1 = events.where(to_date($"ts") === "2024-01-01")
-    val d2 = events.where(to_date($"ts") === "2024-01-02")
-    val d3 = events.where(to_date($"ts") === "2024-01-03")
+  /** Day slices, delivered with day 2 duplicated across two batches,
+    * must land on the full-batch star schema. */
+  private def replayConverges(): Unit = {
+    val full = EtlJob.run(None, events, "full")
+    val (d1, d2, d3) = (day(1), day(2), day(3))
     val s1 = EtlJob.run(None, d1, "b1")
     val s2 = EtlJob.run(Some(s1), d2.unionAll(d1.limit(10)), "b2") // replays
     val s3 = EtlJob.run(Some(s2), d3.unionAll(d2), "b3") // full d2 again
@@ -42,13 +43,109 @@ class EtlJobSpec extends SparkSpec {
     val processed = s3.ledger.agg(sum($"records_processed")).collect()(0)
       .getLong(0)
     assert(processed == events.dropDuplicates("user_id", "ts").count())
+    assert(s3.ledger.select($"batch_id", $"records_processed").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq ==
+      Seq("b1" -> 30L, "b2" -> 30L, "b3" -> 30L))
+  }
+
+  test("incremental day-sliced replay converges to the full-batch state") {
+    replayConverges()
+  }
+
+  test("replay converges with every pin on the reliable checkpoint") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_etl_ckpt")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    spark.conf.set(Stage.ReliableFlag, "true")
+    try {
+      replayConverges()
+      assert(Option(dir.toFile.list()).exists(_.nonEmpty),
+        "reliable mode wrote nothing to the checkpoint dir")
+    } finally spark.conf.set(Stage.ReliableFlag, "false")
+  }
+
+  test("each run reads its raw batch once") {
+    // a nondeterministic tap counts every raw row any job reads; the
+    // repartition keeps the optimizer from evaluating it on the driver
+    val reads = spark.sparkContext.longAccumulator("etl_raw_reads")
+    val tap = udf { (id: Long) => reads.add(1); id }.asNondeterministic()
+    def tapped(df: DataFrame): DataFrame =
+      df.repartition(2).withColumn("event_id", tap($"event_id"))
+    val batches = Seq(day(1), day(2).unionAll(day(1).limit(10)), day(3))
+    val handedIn = batches.map(_.count()).sum
+    val s = batches.zipWithIndex.foldLeft(Option.empty[EtlJob.EtlState]) {
+      case (st, (b, i)) => Some(EtlJob.run(st, tapped(b), s"b$i"))
+    }.get
+    Seq(s.fact, s.dimUsers, s.dimTypes, s.dimDates, s.dailyStats, s.ledger)
+      .foreach(_.collect())
+    assert(reads.value == handedIn,
+      s"${reads.value} raw rows read for $handedIn handed in")
+  }
+
+  /** Two events of a fourth day, in no other batch. */
+  private def extra: DataFrame = eventsDf(Seq(
+    (900L, 1L, "2024-01-04 09:00:00", "play", 2.0, "{}"),
+    (901L, 2L, "2024-01-04 10:30:00", "skip", 1.0, "{}")))
+
+  test("the ledger is kept on the driver: reading it runs no job") {
+    val batches = Seq(
+      "b1" -> day(1),
+      "b2" -> day(2).unionAll(day(1).limit(10)),
+      "b3" -> day(1), // pure replay
+      "b4" -> day(3).unionAll(day(3)), // in-batch duplicates
+      "b5" -> events, // pure replay of everything
+      "b6" -> events.unionAll(extra))
+    def mark(df: DataFrame) = Option(df.agg(max($"ts")).collect()(0)
+      .getTimestamp(0))
+    val expected = Seq(
+      ("b1", 30L, mark(day(1))), ("b2", 30L, mark(day(2))),
+      ("b3", 0L, None), ("b4", 30L, mark(day(3))),
+      ("b5", 0L, None), ("b6", 2L, mark(extra)))
+    def logged(st: EtlJob.EtlState) = st.ledger.collect().toSeq.map(r =>
+      (r.getString(0), r.getLong(1), Option(r.getTimestamp(2))))
+
+    val s1 = EtlJob.run(None, batches.head._2, batches.head._1)
+    assert(countJobs(s1.ledger.collect()) == 0)
+    assert(logged(s1) == expected.take(1))
+    val s6 = batches.tail.foldLeft(s1) { case (st, (id, b)) =>
+      EtlJob.run(Some(st), b, id)
+    }
+    assert(countJobs(s6.ledger.collect()) == 0)
+    assert(logged(s6) == expected)
+    assert(s6.ledger.schema.map(f => f.name -> f.nullable) == Seq(
+      "batch_id" -> false, "records_processed" -> false,
+      "high_watermark" -> true))
+  }
+
+  test("lazily pinned state: a fold with no action between runs keeps " +
+    "lineage bounded") {
+    val full = EtlJob.run(None, events, "full")
+    // twelve slices, each re-sending a few rows of the one before
+    val slices = (0 until 12).map { k =>
+      events.where(($"event_id" % 12) === k)
+        .unionAll(events.where(($"event_id" % 12) === (k + 11) % 12)
+          .limit(2))
+    }
+    var state = Option.empty[EtlJob.EtlState]
+    val jobs = slices.zipWithIndex.map { case (b, i) =>
+      countJobs { state = Some(EtlJob.run(state, b, s"b$i")) }
+    }
+    val s12 = state.get
+    assert(sorted(s12.fact) == sorted(full.fact))
+    assert(sorted(s12.dimUsers) == sorted(full.dimUsers))
+    assert(sorted(s12.dimTypes) == sorted(full.dimTypes))
+    assert(sorted(s12.dimDates) == sorted(full.dimDates))
+    assert(sorted(s12.dailyStats) == sorted(full.dailyStats))
+    val thirteenth = countJobs {
+      state = Some(EtlJob.run(state, extra.unionAll(day(2)), "b12"))
+    }
+    info(s"jobs per run: ${(jobs :+ thirteenth).mkString("/")}")
+    assert(thirteenth <= jobs(1),
+      s"run 13 launched $thirteenth jobs, run 2 ${jobs(1)}")
   }
 
   test("out-of-order backfill delivery converges to the full-batch state") {
     val full = EtlJob.run(None, events, "full")
-    val d1 = events.where(to_date($"ts") === "2024-01-01")
-    val d2 = events.where(to_date($"ts") === "2024-01-02")
-    val d3 = events.where(to_date($"ts") === "2024-01-03")
+    val (d1, d2, d3) = (day(1), day(2), day(3))
     // newest day first, then a backfill of the oldest, then the middle
     val s1 = EtlJob.run(None, d3, "b1")
     val s2 = EtlJob.run(Some(s1), d1, "b2_backfill")
@@ -60,9 +157,7 @@ class EtlJobSpec extends SparkSpec {
   }
 
   test("incremental dims equal the StarSchema aggregates over history") {
-    val d1 = events.where(to_date($"ts") === "2024-01-01")
-    val d2 = events.where(to_date($"ts") === "2024-01-02")
-    val d3 = events.where(to_date($"ts") === "2024-01-03")
+    val (d1, d2, d3) = (day(1), day(2), day(3))
     val s1 = EtlJob.run(None, d1, "b1")
     val s2 = EtlJob.run(Some(s1), d2.unionAll(d1.limit(5)), "b2")
     val s3 = EtlJob.run(Some(s2), d3, "b3")

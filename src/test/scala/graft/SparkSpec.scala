@@ -28,8 +28,11 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   /** Spark jobs launched while `body` runs, counted by a listener
-    * once every event posted so far is delivered. */
+    * once every event posted so far is delivered. Events of earlier
+    * jobs are delivered before the listener is added, so they are not
+    * counted. */
   def countJobs(body: => Unit): Int = {
+    org.apache.spark.SpecProbe.drain(spark.sparkContext)
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
