@@ -252,9 +252,9 @@ object Suite {
     // ---- the EtlJob PIPELINE's daily stats against the dedup-aware
     // oracle: the composed incremental job (clean -> upsert-key dedup
     // -> touched-date recompute) must land on the identical aggregate.
-    // Running it pins the deduplicated batch once; daily stats are read
-    // off that pin, and the lazily pinned fact and dim accumulators stay
-    // unfilled because nothing reads them. --------------------------------
+    // Running it pins the deduplicated batch once and pins the dim
+    // accumulators and daily stats off that pin: that IS the
+    // pipeline's work, deliberately not skipped here. ---------------------
     Q("etl_job_daily_stats",
       (s, d) => graft.operators.EtlJob
         .run(None, Tables(s, d).events, "verify").dailyStats,

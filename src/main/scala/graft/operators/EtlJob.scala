@@ -54,15 +54,13 @@ object EtlJob {
   /** One incremental run. `state=None` bootstraps from the batch.
     *
     * The batch is read ONCE: `cleanBatch` is the only frame over
-    * `rawBatch`, and it is pinned eagerly here, so a caller may hand in
-    * a micro-batch or a mutable source and change it after `run`
-    * returns. The same pin job fills the batch's ledger row through an
-    * observation, so the ledger is a driver-local frame that costs no
-    * job to read. Every carried frame is pinned LAZILY: the caller's
-    * first read fills it, with no pin job of its own. That is safe
-    * because each of their inputs is already a pin (the batch pin or
-    * the previous state's pins), so a late fill reads the same rows an
-    * eager one would. */
+    * `rawBatch`, and it is pinned here, so a caller may hand in a
+    * micro-batch or a mutable source and change it after `run`
+    * returns. The same pin job fills an observation with the batch's
+    * ledger row and the dates it touches, so the ledger is a
+    * driver-local frame that costs no job to read, and no job looks up
+    * the daily-stats partitions to replace. Every other frame is
+    * derived from that pin and the previous state's pins. */
   def run(state: Option[EtlState], rawBatch: DataFrame,
       batchId: String): EtlState = {
     // P1-P3 projection, then the layered upsert-key protection (J2):
@@ -74,31 +72,26 @@ object EtlJob {
       StarSchema.clean(rawBatch),
       Seq("user_id", "ts"), "event_id")
       .observe(seen, count(lit(1)).as("records_processed"),
-        max(col("ts")).as("high_watermark"))
+        max(col("ts")).as("high_watermark"),
+        collect_set(col("event_date")).as("touched_dates"))
       .pinned
 
     val mergedClean = state match {
-      case Some(s) => s.clean.unionByName(cleanBatch).pinnedLazy
+      case Some(s) => s.clean.unionByName(cleanBatch).pinned
       case None => cleanBatch
-    }
-
-    // Fact is append-only: surrogate keys are content hashes (md5 of
-    // the natural key), so keys assigned from this batch alone agree
-    // with every other batch — no cross-batch key coordination.
-    val fact = state match {
-      case Some(s) => s.fact.unionByName(StarSchema.fact(cleanBatch))
-      case None => StarSchema.fact(cleanBatch)
     }
 
     // Daily stats: recompute ONLY the touched dates over the merged
     // clean (a batch can extend a partially-loaded day), then swap
-    // those partitions into the existing aggregate.
-    val touched = cleanBatch.select(col("event_date")).distinct()
+    // those partitions into the existing aggregate. The batch pin's
+    // observation lists the touched dates, so finding them runs no job.
+    val m = seen.get
+    val touched = m("touched_dates").asInstanceOf[Seq[Any]]
     val statsTouched = StarSchema.dailyStats(
-      mergedClean.join(broadcast(touched), Seq("event_date")))
+      mergedClean.where(col("event_date").isin(touched: _*)))
     val dailyStats = state match {
-      case Some(s) =>
-        Sinks.replacePartition(s.dailyStats, statsTouched, "event_date")
+      case Some(s) => Sinks.replacePartition(s.dailyStats, statsTouched,
+        "event_date", touched)
       case None => statsTouched
     }
 
@@ -138,17 +131,18 @@ object EtlJob {
     // prior batches — O(N^2) across N batches and an eventual
     // StackOverflow in analysis. A production deployment writes these
     // to tables; a pin is the in-memory equivalent (blocks are freed
-    // when the state is dropped). The batch pin above is the only
-    // EAGER one: it captures the caller's source and delivers the
-    // observation. The rest are lazy (see the scaladoc): the caller's
-    // publish fills them.
-    val userDayCp = userDayCounts.pinnedLazy
-    val typeStatsCp = typeStats.pinnedLazy
+    // when the state is dropped). Every pin in a run is EAGER. A lazy
+    // pin cuts its lineage only when a job reads it directly, and
+    // Spark stops that cut at the first pinned frame it meets: the
+    // next run reads these frames only through its own pins, and a
+    // foreachBatch caller may read none of them, so lazy carried pins
+    // would nest one level per run and keep every earlier pin cached.
+    val userDayCp = userDayCounts.pinned
+    val typeStatsCp = typeStats.pinned
 
     // The ledger (batch_execution_log) lives on the driver: the
     // previous rows plus this batch's row, read from the observation
     // the batch pin filled. A pure replay logs 0 rows and a null mark.
-    val m = seen.get
     val ledgerSchema = StructType(Seq(
       StructField("batch_id", StringType, nullable = false),
       StructField("records_processed", LongType, nullable = false),
@@ -158,7 +152,11 @@ object EtlJob {
 
     EtlState(
       clean = mergedClean,
-      fact = fact.pinnedLazy,
+      // the append-only fact is a projection of the merged clean:
+      // surrogate keys are content hashes (md5 of the natural key), so
+      // a row's keys never depend on the batch that brought it — no
+      // cross-batch key coordination, and no pin of its own
+      fact = StarSchema.fact(mergedClean),
       // dims derived from the accumulators — identical to
       // StarSchema.dim* over the full merged clean (pinned by spec),
       // but each run's aggregation input is the compact accumulator,
@@ -176,7 +174,7 @@ object EtlJob {
         StarSchema.typeKey(col("event_type")).as("type_key"),
         col("event_type"), col("first_seen"), col("total_events")),
       dimDates = StarSchema.dimDates(userDayCp),
-      dailyStats = dailyStats.pinnedLazy,
+      dailyStats = dailyStats.pinned,
       ledger = rawBatch.sparkSession.createDataFrame(
         ledgerRows.asJava, ledgerSchema),
       userDayCounts = userDayCp,

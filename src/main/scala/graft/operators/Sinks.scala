@@ -54,13 +54,13 @@ object Sinks {
   /** S11 (`INSERT ... ON CONFLICT (stats_date) DO UPDATE`,
     * daily_etl_pipeline.py:518-570): recompute-and-replace a partition
     * slice — rows of `existing` outside the recomputed partition values
-    * plus all of `recomputed` (the DataFrame form of a
+    * `parts` plus all of `recomputed` (the DataFrame form of a
     * `replaceWhere` overwrite, which is how a per-day aggregate upsert
-    * should be written at scale). */
+    * should be written at scale). The caller names the values it
+    * recomputed, as a `replaceWhere` does, so no job looks them up; rows
+    * of `existing` with a null partition value are kept. */
   def replacePartition(existing: DataFrame, recomputed: DataFrame,
-      partCol: String): DataFrame = {
-    val parts = recomputed.select(col(partCol)).distinct()
-    existing.join(parts, Seq(partCol), "left_anti")
+      partCol: String, parts: Seq[Any]): DataFrame =
+    existing.where(!coalesce(col(partCol).isin(parts: _*), lit(false)))
       .unionByName(recomputed)
-  }
 }

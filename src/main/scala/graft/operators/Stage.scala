@@ -31,16 +31,21 @@ private[graft] object Stage {
     /** [[pinned]] with LAZY materialization: the blocks fill during
       * the first consuming job instead of a dedicated eager pin job,
       * and later consumers read them back like any checkpoint — same
-      * data, same lineage truncation, one fewer job per pin site.
+      * data, one fewer job per pin site on the local form. The
+      * lineage is cut only when a job reads this frame directly:
+      * Spark stops the cut at the first pinned frame it meets, so a
+      * frame read only through another lazy pin stays uncut and
+      * cached. The reliable form does not persist the frame, so its
+      * fill computes the frame twice (the consumer, then the
+      * checkpoint write).
       * Right for a strictly SEQUENTIAL chain whose next stage always
-      * consumes the previous one (the curate funnel), and for carried
-      * state whose inputs are all pins already (EtlJob's carried
-      * frames): a late fill reads the same rows an eager one would.
-      * NOT a drop-in for `pinned` everywhere: sites that pin to
-      * capture a mutable source before a swap (the index maintenance
-      * doors, EtlJob's batch pin) or hand the frame to concurrent
-      * driver threads (the overlap sites) rely on eager,
-      * single-threaded materialization. */
+      * consumes the previous one (the curate funnel). NOT a drop-in
+      * for `pinned` everywhere: sites that pin to capture a mutable
+      * source before a swap (the index maintenance doors, EtlJob's
+      * batch pin), hand the frame to concurrent driver threads (the
+      * overlap sites) or carry state with no guaranteed direct reader
+      * (EtlJob's state) rely on eager, single-threaded
+      * materialization. */
     def pinnedLazy: Dataset[T] =
       if (ds.sparkSession.conf.get(ReliableFlag, "false").toBoolean)
         ds.checkpoint(eager = false)

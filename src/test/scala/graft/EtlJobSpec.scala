@@ -116,19 +116,65 @@ class EtlJobSpec extends SparkSpec {
       "high_watermark" -> true))
   }
 
-  test("lazily pinned state: a fold with no action between runs keeps " +
-    "lineage bounded") {
+  /** Twelve slices, each re-sending a few rows of the one before. */
+  private def slices: Seq[DataFrame] = (0 until 12).map { k =>
+    events.where(($"event_id" % 12) === k)
+      .unionAll(events.where(($"event_id" % 12) === (k + 11) % 12)
+        .limit(2))
+  }
+
+  /** The state's frames that are a pin or a projection of one, so
+    * building their RDDs runs no job. */
+  private def carried(s: EtlJob.EtlState): Seq[DataFrame] =
+    Seq(s.clean, s.fact, s.userDayCounts, s.typeStats, s.dailyStats)
+
+  /** Lines of each carried frame's RDD lineage. */
+  private def depths(s: EtlJob.EtlState): Seq[Int] =
+    carried(s).map(_.rdd.toDebugString.linesIterator.size)
+
+  /** Persisted RDDs reachable from the carried frames' lineage: the
+    * blocks this state keeps cached. */
+  private def cachedReach(s: EtlJob.EtlState): Int = {
+    def walk(r: org.apache.spark.rdd.RDD[_], seen: Set[Int]): Set[Int] =
+      if (seen(r.id)) seen
+      else r.dependencies.map(_.rdd).foldLeft(seen + r.id)((acc, p) =>
+        walk(p, acc))
+    val ids = carried(s).map(_.rdd).foldLeft(Set.empty[Int])((acc, r) =>
+      walk(r, acc))
+    spark.sparkContext.getPersistentRDDs.keySet.count(ids)
+  }
+
+  /** Folds the twelve slices and checks the state's lineage and cached
+    * pins stay flat from run 2 to run 12, then that it equals a
+    * full-batch run. With `readEach`, every frame a day's publish
+    * writes is read after each run, as a warehouse caller does; the
+    * accumulated clean and the dim accumulators are read only through
+    * them. Broadcast joins are off, so the anti-join against history
+    * shuffles, as it does once history outgrows the broadcast limit. */
+  private def foldStaysFlat(readEach: Boolean): Unit = {
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(threshold, "-1")
+    try foldStaysFlatUnbroadcast(readEach)
+    finally spark.conf.unset(threshold)
+  }
+
+  private def foldStaysFlatUnbroadcast(readEach: Boolean): Unit = {
     val full = EtlJob.run(None, events, "full")
-    // twelve slices, each re-sending a few rows of the one before
-    val slices = (0 until 12).map { k =>
-      events.where(($"event_id" % 12) === k)
-        .unionAll(events.where(($"event_id" % 12) === (k + 11) % 12)
-          .limit(2))
-    }
     var state = Option.empty[EtlJob.EtlState]
-    val jobs = slices.zipWithIndex.map { case (b, i) =>
-      countJobs { state = Some(EtlJob.run(state, b, s"b$i")) }
+    val shape = slices.zipWithIndex.map { case (b, i) =>
+      val jobs = countJobs { state = Some(EtlJob.run(state, b, s"b$i")) }
+      val s = state.get
+      if (readEach)
+        Seq(s.fact, s.dimUsers, s.dimTypes, s.dimDates, s.dailyStats,
+          s.ledger).foreach(_.collect())
+      (jobs, depths(s), cachedReach(s))
     }
+    info(s"per run (jobs, lineage lines, cached pins): " +
+      shape.mkString(" "))
+    val (_, depth2, cached2) = shape(1)
+    val (_, depth12, cached12) = shape.last
+    assert(depth12 == depth2, "carried lineage grew from run 2 to run 12")
+    assert(cached12 == cached2, "cached pins grew from run 2 to run 12")
     val s12 = state.get
     assert(sorted(s12.fact) == sorted(full.fact))
     assert(sorted(s12.dimUsers) == sorted(full.dimUsers))
@@ -138,9 +184,18 @@ class EtlJobSpec extends SparkSpec {
     val thirteenth = countJobs {
       state = Some(EtlJob.run(state, extra.unionAll(day(2)), "b12"))
     }
-    info(s"jobs per run: ${(jobs :+ thirteenth).mkString("/")}")
-    assert(thirteenth <= jobs(1),
-      s"run 13 launched $thirteenth jobs, run 2 ${jobs(1)}")
+    assert(thirteenth <= shape(1)._1,
+      s"run 13 launched $thirteenth jobs, run 2 ${shape(1)._1}")
+  }
+
+  test("a fold with no read between runs keeps lineage bounded " +
+    "(the foreachBatch pattern)") {
+    foldStaysFlat(readEach = false)
+  }
+
+  test("a fold that reads every published frame after each run keeps " +
+    "lineage and cached pins flat") {
+    foldStaysFlat(readEach = true)
   }
 
   test("out-of-order backfill delivery converges to the full-batch state") {

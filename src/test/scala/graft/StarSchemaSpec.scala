@@ -76,7 +76,8 @@ class StarSchemaSpec extends SparkSpec {
     val existing = Seq(("2024-01-01", 5L), ("2024-01-02", 7L))
       .toDF("stats_date", "n")
     val recomputed = Seq(("2024-01-02", 9L)).toDF("stats_date", "n")
-    val out = Sinks.replacePartition(existing, recomputed, "stats_date")
+    val out = Sinks.replacePartition(existing, recomputed, "stats_date",
+      Seq("2024-01-02"))
     assert(out.count() == 2)
     assert(out.where($"stats_date" === "2024-01-02").collect()(0)
       .getAs[Long]("n") == 9L)
